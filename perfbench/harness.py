@@ -10,19 +10,24 @@ import time
 
 import procs
 
-# the end-to-end workloads; the traced run also times the query registry
 WORKLOADS = ("batch_bulk", "stream_compact")
 PACKAGE = "racing_telemetry_pipeline_spark"
 
-# (transcript scale, star size, batch rows/file, stream rows/file)
+# (transcript scale, batch rows/file, stream rows/file)
 SIZES = {
-    "bench": ("bench-batch", "bench", 12_000, 4_700),
-    "smoke": ("bench-unit", "unit", 1_500, 400),
+    "bench": ("bench-batch", 12_000, 4_700),
+    "smoke": ("sf-unit", 1_500, 400),
 }
 
 
 class Env:
-    """Directories and host settings of one run."""
+    """Directories and host settings of one run.
+
+    Everything a run writes (lakes, Spark's local dirs, temp files) is under
+    ``.bench_work/`` in the checkout, because the benchmark may write
+    nowhere else. So shuffle, spill and lake writes go to the checkout's
+    file system, not to the tmpfs (/dev/shm) that ``get_spark`` picks for
+    ``spark.local.dir`` by default."""
 
     def __init__(self, root: str, smoke: bool):
         self.root = root
@@ -73,6 +78,7 @@ class Env:
             "parse_engine": "pandas_udf",
             "approx_percentiles": False,
             "size": self.size,
+            "spark.local.dir": self.local,
         }
 
 
@@ -94,10 +100,7 @@ def make_workload(name: str, env: Env, seed: int):
     import inputs
     import workloads
 
-    scale, star, batch_rpf, stream_rpf = SIZES[env.size]
-    if name == "queries":
-        star_dir, gen_s = inputs.star_schema(env.cache, star, seed)
-        return workloads.Queries(star_dir, seed), 0, gen_s
+    scale, batch_rpf, stream_rpf = SIZES[env.size]
     rpf = batch_rpf if name == "batch_bulk" else stream_rpf
     raw, gen_s = inputs.transcripts(env.cache, scale, seed, rpf)
     cls = workloads.Batch if name == "batch_bulk" else workloads.Stream
@@ -112,19 +115,19 @@ class Counts:
 def run_op(spark, wl, env: Env, counts: Counts):
     """One operation on a fresh lake: time it, check it outside the
     timing, delete the lake, collect garbage. Returns (wall seconds, CPU
-    seconds of the driver JVM and its Python workers, result)."""
+    seconds of this Python driver, the driver JVM and its Python workers,
+    result)."""
     lake = env.fresh_lake()
     counts.attempted += 1
     result, ok = None, True
-    jvm = procs.jvm_pid()
-    cpu0, t0 = procs.cpu_s(procs.tree(jvm)), time.perf_counter()
+    cpu0, t0 = procs.driver_cpu_s(), time.perf_counter()
     try:
         result = wl.op(spark, lake)
     except Exception as e:  # an operation that raises is a failed one
         print(f"[perfbench] {wl.name} raised {type(e).__name__}: {e}", flush=True)
         ok = False
     wall = time.perf_counter() - t0
-    cpu = procs.cpu_s(procs.tree(jvm)) - cpu0
+    cpu = procs.driver_cpu_s() - cpu0
     if ok:
         ok = wl.check(spark, lake, result) == 0
     counts.failed += not ok

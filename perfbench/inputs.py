@@ -1,14 +1,9 @@
-"""Seeded benchmark inputs, cached on disk by (kind, scale, seed, rows_per_file).
+"""Seeded benchmark inputs, cached on disk by (scale, seed, rows_per_file).
 
-Two input families:
-
-- transcripts: ``datagen.write_transcripts`` at a bench scale that this
-  module adds to ``config.SCALES`` at run time (config.py stays as it is),
-  with ~16% injected duplicates and three hot conversations of ~5% of the
-  turns each;
-- star schema: the ten tables the query registry reads (``region`` ..
-  ``embeddings``), generated with the column names, types and value
-  shapes of the sf testdata the registry's oracles were written against.
+Transcripts from ``datagen.write_transcripts``, with ~16% injected
+duplicates and hot conversations of ~5% of the turns each. The measured
+scale is registered in ``config.SCALES`` at run time (config.py stays as
+it is); smoke runs use config's own ``sf-unit``.
 """
 
 from __future__ import annotations
@@ -18,185 +13,29 @@ import os
 import shutil
 import time
 
-import numpy as np
-import pyarrow as pa
 import pyarrow.parquet as pq
 
 from racing_telemetry_pipeline_spark.config import SCALES, Scale
 from racing_telemetry_pipeline_spark.datagen import write_transcripts
 
-# name -> (n_convs, mean_turns, n_hot). "bench-*" are the measured sizes,
-# "bench-unit" is the smoke size (sf-unit's shape).
-BENCH_SCALES = {
-    "bench-batch": (1000, 80, 3),
-    "bench-unit": (50, 40, 1),
-}
-
-# star-schema scale factor per input size: rows scale like the testdata
-# (sf0.01 = 60k lineitem rows).
-STAR_SF = {"bench": 0.01, "unit": 0.001}
+# the measured scale: 1,000 convs, mean 80 turns, 3 hot convs
+SCALES.setdefault("bench-batch", Scale("bench-batch", n_convs=1000, mean_turns=80, n_hot=3))
 
 
-def _register(scale: str) -> None:
-    n_convs, mean_turns, n_hot = BENCH_SCALES[scale]
-    SCALES[scale] = Scale(scale, n_convs=n_convs, mean_turns=mean_turns, n_hot=n_hot)
-
-
-def _cached(path: str, build) -> tuple[str, float]:
-    """Build ``path`` once (atomically via a temp dir); returns (path, gen_s)."""
+def transcripts(cache: str, scale: str, seed: int, rows_per_file: int) -> tuple[str, float]:
+    """Raw transcript parquet dir for (scale, seed, rows_per_file), built
+    once (atomically via a temp dir); returns (path, generation seconds)."""
+    sc = SCALES[scale]
+    path = os.path.join(cache, f"transcripts-{sc.n_convs}x{sc.mean_turns}h{sc.n_hot}-s{seed}-r{rows_per_file}")
     if os.path.isdir(path):
         return path, 0.0
     tmp = f"{path}.tmp{os.getpid()}"
     shutil.rmtree(tmp, ignore_errors=True)
     t0 = time.perf_counter()
-    build(tmp)
+    write_transcripts(tmp, scale, seed=seed, rows_per_file=rows_per_file)
     os.replace(tmp, path)
     return path, time.perf_counter() - t0
 
 
-def transcripts(cache: str, scale: str, seed: int, rows_per_file: int) -> tuple[str, float]:
-    """Raw transcript parquet dir for (scale, seed, rows_per_file)."""
-    _register(scale)
-    n_convs, mean_turns, n_hot = BENCH_SCALES[scale]
-    path = os.path.join(cache, f"transcripts-{n_convs}x{mean_turns}h{n_hot}-s{seed}-r{rows_per_file}")
-    return _cached(path, lambda d: write_transcripts(d, scale, seed=seed, rows_per_file=rows_per_file))
-
-
 def n_rows(raw_dir: str) -> int:
     return sum(pq.ParquetFile(f).metadata.num_rows for f in glob.glob(f"{raw_dir}/*.parquet"))
-
-
-def star_schema(cache: str, size: str, seed: int) -> tuple[str, float]:
-    """Star-schema parquet dir (one ``<table>.parquet`` file per table)."""
-    path = os.path.join(cache, f"star-{size}-s{seed}")
-    return _cached(path, lambda d: _write_star(d, STAR_SF[size], seed))
-
-
-_VOCAB = (
-    "spark window merge table column vector stream value data small join filter "
-    "big group hash customer sort order slow line part fast row the agg key "
-    "query a scan batch"
-).split()
-_COLORS = ["large", "hot", "blue", "old", "cold", "red", "small", "green"]
-_ITEMS = ["ring", "bolt", "plate", "gear", "widget", "rod", "anvil", "gizmo"]
-
-
-def _days(rng, n, start, end) -> pa.Array:
-    lo, hi = np.datetime64(start, "D"), np.datetime64(end, "D")
-    d = lo + rng.integers(0, int((hi - lo).astype(int)) + 1, n).astype("timedelta64[D]")
-    return pa.array(d.astype("datetime64[us]"), pa.timestamp("us"))
-
-
-def _money(rng, n, lo, hi) -> np.ndarray:
-    return np.round(rng.uniform(lo, hi, n), 2)
-
-
-def _write_star(out: str, sf: float, seed: int) -> None:
-    rng = np.random.default_rng(seed)
-    n_cust, n_supp, n_part = int(150_000 * sf), int(10_000 * sf), int(200_000 * sf)
-    n_ord, n_line = int(1_500_000 * sf), int(6_000_000 * sf)
-    n_ev, n_users = int(1_000_000 * sf), max(int(15_000 * sf), 10)
-    n_docs, n_vecs = int(50_000 * sf), max(int(20_000 * sf), 40)
-    i32, i64 = pa.int32(), pa.int64()
-
-    def idx(n):
-        return pa.array(np.arange(n), i64)
-
-    tables = {
-        "region": {
-            "r_regionkey": pa.array(np.arange(5), i32),
-            "r_name": ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"],
-        },
-        "nation": {
-            "n_nationkey": pa.array(np.arange(25), i32),
-            "n_name": [f"NATION_{i}" for i in range(25)],
-            "n_regionkey": pa.array(np.arange(25) % 5, i32),
-        },
-        "customer": {
-            "c_custkey": idx(n_cust),
-            "c_name": [f"Customer#{i:09d}" for i in range(n_cust)],
-            "c_nationkey": pa.array(rng.integers(0, 25, n_cust), i32),
-            "c_acctbal": _money(rng, n_cust, -999.99, 9999.99),
-            "c_mktsegment": rng.choice(
-                ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"], n_cust
-            ),
-        },
-        "supplier": {
-            "s_suppkey": idx(n_supp),
-            "s_name": [f"Supplier#{i:09d}" for i in range(n_supp)],
-            "s_nationkey": pa.array(rng.integers(0, 25, n_supp), i32),
-            "s_acctbal": _money(rng, n_supp, -999.99, 9999.99),
-        },
-        "part": {
-            "p_partkey": idx(n_part),
-            "p_name": [f"{a} {b}" for a, b in zip(rng.choice(_COLORS, n_part), rng.choice(_ITEMS, n_part))],
-            "p_brand": [f"Brand#{b}" for b in rng.integers(1, 26, n_part)],
-            "p_type": rng.choice(["ECONOMY", "LARGE", "MEDIUM", "PROMO", "SMALL", "STANDARD"], n_part),
-            "p_size": pa.array(rng.integers(1, 51, n_part), i32),
-            "p_retailprice": np.round(900 + (np.arange(n_part) % 1000) / 10, 1),
-        },
-        "orders": {
-            "o_orderkey": idx(n_ord),
-            "o_custkey": pa.array(rng.integers(0, n_cust, n_ord), i64),
-            "o_orderstatus": rng.choice(["F", "O", "P"], n_ord),
-            "o_totalprice": _money(rng, n_ord, 1000, 500_000),
-            "o_orderdate": _days(rng, n_ord, "1995-01-01", "2001-08-01"),
-            "o_orderpriority": rng.choice(
-                ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"], n_ord
-            ),
-        },
-        "lineitem": {
-            "l_orderkey": pa.array(rng.integers(0, n_ord, n_line), i64),
-            "l_partkey": pa.array(rng.integers(0, n_part, n_line), i64),
-            "l_suppkey": pa.array(rng.integers(0, n_supp, n_line), i64),
-            "l_linenumber": pa.array(rng.integers(1, 8, n_line), i32),
-            "l_quantity": rng.integers(1, 51, n_line).astype(float),
-            "l_extendedprice": _money(rng, n_line, 900, 105_000),
-            "l_discount": rng.integers(0, 11, n_line) / 100,
-            "l_tax": rng.integers(0, 9, n_line) / 100,
-            "l_returnflag": rng.choice(["A", "N", "R"], n_line),
-            "l_linestatus": rng.choice(["F", "O"], n_line),
-            "l_shipdate": _days(rng, n_line, "1995-01-02", "2001-11-04"),
-        },
-    }
-
-    # events: one stream ordered by ts (event_id is the ingest ordinal)
-    gaps_us = rng.exponential(26e6, n_ev).astype(np.int64) + 1
-    ts = np.datetime64("2024-01-01T00:00:00", "us") + np.cumsum(gaps_us).astype("timedelta64[us]")
-    tables["events"] = {
-        "event_id": idx(n_ev),
-        "ts": pa.array(ts, pa.timestamp("us")),
-        "user_id": pa.array(rng.integers(0, n_users, n_ev), i64),
-        "event_type": rng.choice(["click", "error", "purchase", "signup", "view"], n_ev),
-        "value": np.round(rng.exponential(50.0, n_ev), 2),
-        "props": [f'{{"k": {k}}}' for k in rng.integers(0, 100, n_ev)],
-    }
-
-    # documents: random vocabulary text; ~5% are "<earlier doc> dup" near-dups
-    lengths = rng.integers(10, 101, n_docs)
-    texts = [" ".join(rng.choice(_VOCAB, n)) for n in lengths]
-    for i in np.flatnonzero(rng.random(n_docs) < 0.05):
-        if i > 0:
-            texts[i] = texts[int(rng.integers(0, i))] + " dup"
-    tables["documents"] = {
-        "doc_id": idx(n_docs),
-        "text": texts,
-        "lang": rng.choice(["en", "es", "fr", "de", "zh"], n_docs, p=[0.4, 0.15, 0.15, 0.15, 0.15]),
-        "source": [f"src{i % 20}" for i in range(n_docs)],
-        "n_chars": pa.array([len(s) for s in texts], i64),
-    }
-
-    # embeddings: 64-d unit vectors around 10 cluster centres
-    centres = rng.normal(size=(10, 64))
-    label = rng.integers(0, 10, n_vecs)
-    vec = centres[label] + rng.normal(scale=1.5, size=(n_vecs, 64))
-    vec = (vec / np.linalg.norm(vec, axis=1, keepdims=True)).astype(np.float32)
-    tables["embeddings"] = {
-        "vec_id": idx(n_vecs),
-        "embedding": pa.array(list(vec), pa.list_(pa.float32())),
-        "label": pa.array(label, i32),
-    }
-
-    os.makedirs(out)
-    for name, cols in tables.items():
-        pq.write_table(pa.table(cols), os.path.join(out, f"{name}.parquet"))

@@ -1,16 +1,16 @@
-"""The traced run: per-layer metrics of every workload.
+"""The traced run: per-layer metrics of both workloads.
 
 First, untraced, the cold operation of the run's workload. Then, with
 Spark's event log on, each call under a named span (tracing.py); the
 run's own workload goes last, so its operation is warm:
 
-- ``queries``: each headline registry query of one pass, on the
-  sf0.01-sized star schema;
 - ``batch_bulk``: the routed-stage ladder (cumulative prefixes of the
   routed plan, each written to a ``noop`` sink, then the real routed
-  stage, ``run_pipeline(stop_after="routed")``; two passes, each layer
-  keeps its faster one), one ``run_pipeline``, and each post-routed job
-  run serially on its lake;
+  stage, ``run_pipeline(stop_after="routed")``), one ``run_pipeline``,
+  and each post-routed job run serially on its lake. The ladder runs
+  ``LADDER_PASSES`` times; a layer's self time is its prefix time minus
+  the previous prefix time of the same pass, and its metric is the
+  median of those differences over the passes;
 - ``stream_compact``: both halves of one operation.
 
 Last, one more untraced operation of the run's workload: the baseline of
@@ -23,11 +23,11 @@ from __future__ import annotations
 import glob
 import os
 import shutil
+import statistics
 
 from pyspark.sql import functions as F
 
 import procs
-import workloads
 from harness import make_workload, run_op, start_session
 from tracing import Spans, event_log, span_stats
 
@@ -48,7 +48,13 @@ POST = [
     "pipeline.lineage",
 ]
 WHOLE = ["jobs", "stages", "task_cpu_s", "spill_mb", "gc_s", "driver_idle_s"]
-LADDER_PASSES = 2
+# the first pass still warms the JIT; a median over three passes keeps
+# it from setting a layer's time
+LADDER_PASSES = 3
+
+
+def noop_write(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
 
 
 def _ladder_steps(spark, raw: str, settings=DEFAULTS, engine: str = "pandas_udf"):
@@ -105,15 +111,13 @@ def _batch_layers(spark, spans: Spans, env, wl, counts) -> dict:
     from racing_telemetry_pipeline_spark.sources.lake import Lake
 
     s = DEFAULTS
-    # the ladder, twice: JIT warm-up still speeds up each run at this
-    # point, so each layer keeps its faster pass
     files = 0
     for i in range(LADDER_PASSES):
         df = None
         for name, step in zip(LADDER, _ladder_steps(spark, wl.raw)):
             df = step(df)
             with spans.span(f"{name}#{i}"):
-                workloads.noop_write(df)
+                noop_write(df)
             procs.jvm_gc(spark)
         routed = routed_from_ordinal(
             spark, add_ingest_ordinal(validate_raw(spark.read.parquet(wl.raw))), s, "pandas_udf"
@@ -177,19 +181,8 @@ def _stream_layers(spark, spans: Spans, env, wl, counts) -> dict:
     return {"batches": batches}
 
 
-def _query_layers(spark, spans: Spans, env, wl, counts) -> dict:
-    for name in wl.order:
-        with spans.span(f"query.{name}"):
-            wl.run_query(spark, name)
-    counts.attempted += 1
-    counts.failed += wl.check(spark, None, None) != 0
-    procs.jvm_gc(spark)
-    return {}
-
-
 def traced(args, env, wl, counts, info) -> dict:
-    groups = {"queries": _query_layers, "batch_bulk": _batch_layers,
-              "stream_compact": _stream_layers}
+    groups = {"batch_bulk": _batch_layers, "stream_compact": _stream_layers}
     # every group's layers, the run's own workload last (warmest)
     names = [n for n in groups if n != wl.name] + [wl.name]
     wls = {n: (wl if n == wl.name else make_workload(n, env, args.seed)[0]) for n in names}
@@ -208,17 +201,31 @@ def traced(args, env, wl, counts, info) -> dict:
         procs.shutdown(spark)
     st = span_stats(env.eventlog, spans.spans)
     info["span_s"] = {k: round(v["s"], 3) for k, v in st.items()}
-    for name in LADDER + ["lake.write_routed"]:
-        st[name] = min((st.pop(f"{name}#{i}") for i in range(LADDER_PASSES)), key=lambda v: v["s"])
     return _metrics(st, extra, wl, base_wall, info)
 
 
-def _metrics(st: dict, x: dict, wl, base_wall: float, info: dict) -> dict:
-    m = {}
-    prev = 0.0
+def _ladder(st: dict, info: dict) -> dict:
+    """Per ladder layer: ``self_s``, the median over the passes of its
+    prefix time minus the previous prefix time of the same pass, and the
+    median over the passes of each event-log counter. The per-pass self
+    times go to the details line: a layer cheaper than the run-to-run
+    noise of one prefix job can come out negative there and in the
+    median."""
+    out, by_pass = {}, {}
+    prev = [0.0] * LADDER_PASSES
     for name in LADDER + ["lake.write_routed"]:
-        m[f"{name}.self_s"] = (st[name]["s"] - prev, "s")
-        prev = st[name]["s"]
+        passes = [st.pop(f"{name}#{i}") for i in range(LADDER_PASSES)]
+        by_pass[name] = [p["s"] - q for p, q in zip(passes, prev)]
+        out[name] = {k: statistics.median(p[k] for p in passes) for k in passes[0]}
+        out[name]["self_s"] = statistics.median(by_pass[name])
+        prev = [p["s"] for p in passes]
+    info["ladder_self_s_by_pass"] = {k: [round(v, 3) for v in vs] for k, vs in by_pass.items()}
+    return out
+
+
+def _metrics(st: dict, x: dict, wl, base_wall: float, info: dict) -> dict:
+    st.update(_ladder(st, info))
+    m = {f"{name}.self_s": (st[name]["self_s"], "s") for name in LADDER + ["lake.write_routed"]}
     salted = st["skew.salted_parse_sync"]
     obs = x["observed"]
     m.update({
@@ -247,9 +254,6 @@ def _metrics(st: dict, x: dict, wl, base_wall: float, info: dict) -> dict:
         "stream.compact.spill_mb": (compact["spill_mb"], "MB"),
         "lake.bronze.mb_written": (ingest["mb_written"], "MB"),
     })
-    for name in workloads.HEADLINE:
-        m[f"query.{name}.s"] = (st[f"query.{name}"]["s"], "s")
-
     own = {
         "batch_bulk": ["pipeline.run"],
         "stream_compact": ["stream.raw_to_lake", "stream.compact"],

@@ -1,6 +1,6 @@
 """Process-level helpers: RSS and CPU time of the Spark driver tree, the
-host's CPU steal, JVM GC, tmpfs residency, and shutting the session down
-so that no process outlives the benchmark.
+host's CPU steal, JVM GC, the run directory's residency, and shutting the
+session down so that no process outlives the benchmark.
 
 Everything reads ``/proc``; nothing here needs a package beyond the
 standard library.
@@ -11,11 +11,7 @@ from __future__ import annotations
 import os
 import signal
 import subprocess
-import threading
 import time
-
-_PAGE_MB = os.sysconf("SC_PAGE_SIZE") / 1e6
-
 
 def _children() -> dict[int, list[int]]:
     kids: dict[int, list[int]] = {}
@@ -43,17 +39,6 @@ def tree(pid: int) -> list[int]:
     return out
 
 
-def rss_mb(pids: list[int]) -> float:
-    total = 0.0
-    for p in pids:
-        try:
-            with open(f"/proc/{p}/statm") as fh:
-                total += int(fh.read().split()[1]) * _PAGE_MB
-        except OSError:
-            pass
-    return total
-
-
 _TICK = os.sysconf("SC_CLK_TCK")
 
 
@@ -71,45 +56,43 @@ def cpu_s(pids: list[int]) -> float:
     return total / _TICK
 
 
-class PeakRss:
-    """Samples the summed RSS of a process tree (the driver JVM plus its
-    pyspark daemon and Python workers) every ``interval`` seconds."""
-
-    def __init__(self, pid: int, interval: float = 0.2):
-        self.pid, self.interval, self.peak_mb = pid, interval, 0.0
-        self._stop = threading.Event()
-        self._thread = threading.Thread(target=self._loop, daemon=True)
-
-    def _loop(self) -> None:
-        while not self._stop.is_set():
-            self.peak_mb = max(self.peak_mb, rss_mb(tree(self.pid)))
-            self._stop.wait(self.interval)
-
-    def __enter__(self) -> PeakRss:
-        self._thread.start()
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self._stop.set()
-        self._thread.join(timeout=10)
-
-
 def jvm_pid() -> int:
     from pyspark import SparkContext
 
     return SparkContext._gateway.proc.pid
 
 
+def driver_cpu_s() -> float:
+    """CPU seconds of this Python driver, the driver JVM and the JVM's
+    pyspark daemon and workers."""
+    return cpu_s([os.getpid()] + tree(jvm_pid()))
+
+
+def peak_rss_mb() -> float:
+    """Sum of each process's own peak RSS (VmHWM) over the driver JVM and
+    its pyspark daemon and workers: an upper bound on their joint peak,
+    read once, so nothing samples during the timed operations."""
+    total = 0.0
+    for p in tree(jvm_pid()):
+        try:
+            with open(f"/proc/{p}/status") as fh:
+                kb = next(int(line.split()[1]) for line in fh if line.startswith("VmHWM:"))
+            total += kb * 1024 / 1e6
+        except (OSError, StopIteration):
+            pass
+    return total
+
+
 def jvm_gc(spark) -> None:
     """Full GC between operations: the shuffle files and broadcast blocks
     of a finished operation are only cleaned once the driver collects
-    their references, so without it tmpfs and heap grow run over run."""
+    their references, so without it the local dirs and heap grow run
+    over run."""
     spark.sparkContext._jvm.System.gc()
 
 
-def residency_mb(shm: str, work: str) -> dict[str, float]:
-    """Used MB of the tmpfs at ``shm`` and bytes under ``work``."""
-    st = os.statvfs(shm)
+def residency_mb(work: str) -> float:
+    """MB of files under ``work``: what the run's operations left behind."""
     used = 0
     for d, _, files in os.walk(work):
         for f in files:
@@ -117,7 +100,7 @@ def residency_mb(shm: str, work: str) -> dict[str, float]:
                 used += os.lstat(os.path.join(d, f)).st_size
             except OSError:
                 pass
-    return {"shm": round((st.f_blocks - st.f_bfree) * st.f_frsize / 1e6, 1), "work": round(used / 1e6, 1)}
+    return used / 1e6
 
 
 class Steal:

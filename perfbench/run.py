@@ -13,27 +13,28 @@ Workloads (BENCHMARK.json records why each was chosen):
   micro-batches) then ``compact_stream_to_routed``, on the same rows
   written as ~24 files.
 
-Method. One process, one Spark session at ``local[nproc]`` with the
-package's ``get_spark`` defaults and the pipeline's defaults
+Method. One process, one Spark session at ``local[nproc]`` from the
+package's ``get_spark``, with ``spark.local.dir`` moved from its tmpfs
+default into the checkout (harness.Env), and the pipeline's defaults
 (``pandas_udf`` grok, exact percentiles); the driver heap is a quarter of
 host memory. ``setup_s`` is the session start plus the first (cold)
 operation. Then warm operations run while the next is expected to end
 within ``--seconds`` (at least one), each on a fresh lake that is deleted
 afterwards, with a JVM GC in between; ``wall_s`` is their median wall
-time and ``cpu_s`` their median CPU time (driver JVM plus Python
-workers, which host CPU steal does not inflate). Every
+time and ``cpu_s`` their median CPU time (the Python driver, the driver
+JVM and its Python workers; host CPU steal does not inflate it). Every
 operation's output is checked outside its timing; a wrong output or an
 exception counts as failed.
 
 ``--trace 1`` is a separate run that reports per-layer metrics instead
-(layers.py): after the cold and one untraced warm operation it turns
-Spark's event log on and times, under named spans, the routed-stage
-ladder and each post-routed job of ``batch_bulk``, both halves of
-``stream_compact``, and each headline registry query.
+(layers.py): after the cold operation it turns Spark's event log on and
+times, under named spans, the routed-stage ladder and each post-routed
+job of ``batch_bulk`` and both halves of ``stream_compact``; one more
+untraced operation is the baseline of ``trace.overhead_s``.
 
 The last stdout line is ``{"correct", "attempted", "failed", "metrics"}``;
 the line before it carries run details (input generation time, walls of
-every operation, fail ratio, tmpfs residency, configuration). Inputs and
+every operation, fail ratio, run-directory residency, configuration). Inputs and
 their oracle tables are cached under ``.bench_work/cache``; everything
 else a run writes is under ``.bench_work/run-<pid>`` and removed at exit.
 """
@@ -60,22 +61,20 @@ def measure(args, env: Env, wl, n_rows: int, counts: Counts, info: dict) -> dict
     spark = start_session(env)
     session_s = time.perf_counter() - t0
     try:
-        with procs.PeakRss(procs.jvm_pid()) as rss:
-            cold = run_op(spark, wl, env, counts)[0]
-            # warm operations while the next is expected to end within
-            # --seconds (at least one)
-            walls, cpus = [], []
-            loop_t0 = time.perf_counter()
-            while not walls or time.perf_counter() - loop_t0 + walls[-1] <= args.seconds:
-                wall, cpu, _ = run_op(spark, wl, env, counts)
-                walls.append(wall)
-                cpus.append(cpu)
-            info["residency_mb"] = procs.residency_mb("/dev/shm", env.work)
+        cold = run_op(spark, wl, env, counts)[0]
+        # warm operations while the next is expected to end within
+        # --seconds (at least one)
+        walls, cpus = [], []
+        loop_t0 = time.perf_counter()
+        while not walls or time.perf_counter() - loop_t0 + walls[-1] <= args.seconds:
+            wall, cpu, _ = run_op(spark, wl, env, counts)
+            walls.append(wall)
+            cpus.append(cpu)
+        info.update(peak_rss_mb=procs.peak_rss_mb(), residency_mb=procs.residency_mb(env.work))
     finally:
         procs.shutdown(spark)
     wall = statistics.median(walls)
-    info.update(session_s=session_s, cold_s=cold, walls_s=walls, peak_rss_mb=rss.peak_mb,
-                cpu_steal=steal.share())
+    info.update(session_s=session_s, cold_s=cold, walls_s=walls, cpu_steal=steal.share())
     return {
         "setup_s": (session_s + cold, "s"),
         "wall_s": (wall, "s"),

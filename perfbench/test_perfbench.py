@@ -17,8 +17,9 @@ import pytest
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
-sys.path.insert(0, HERE)
+sys.path[:0] = [HERE, ROOT]
 
+from layers import LADDER, LADDER_PASSES, _ladder  # noqa: E402
 from tracing import Span, _union_ms, span_stats  # noqa: E402
 
 
@@ -77,6 +78,24 @@ def test_span_stats_attributes_jobs_stages_and_skew(tmp_path):
     assert st["b"]["jobs"] == 1 and st["b"]["stages"] == 1
     assert st["b"]["task_skew"] == 1.0
     assert st["b"]["driver_idle_s"] == pytest.approx(0.3)
+
+
+def test_ladder_self_time_is_a_within_pass_difference():
+    # cumulative prefix times of three passes; pass 1 is slow throughout
+    prefix = [[1.0, 1.5, 3.0, 4.0, 5.0, 7.0],
+              [9.0, 9.5, 12.0, 14.0, 15.0, 17.0],
+              [1.0, 1.2, 2.6, 3.2, 4.5, 6.0]]
+    names = LADDER + ["lake.write_routed"]
+    assert LADDER_PASSES == len(prefix)
+    st = {f"{n}#{i}": {"s": t, "mb": 2 * t} for i, ts in enumerate(prefix) for n, t in zip(names, ts)}
+    info = {}
+    out = _ladder(st, info)
+    assert st == {}
+    # dedup: differences 0.5, 0.5, 0.2 in their own pass; not min(1.5, 9.5, 1.2) - min(1.0, 9.0, 1.0)
+    assert out["dedup.add_ingest_ordinal"]["self_s"] == pytest.approx(0.5)
+    assert out["lake.write_routed"]["self_s"] == pytest.approx(2.0)
+    assert out["lake.scan"]["mb"] == pytest.approx(2.0)
+    assert info["ladder_self_s_by_pass"]["skew.salted_parse_sync"] == [1.5, 2.5, 1.4]
 
 
 def test_smoke():

@@ -1,4 +1,4 @@
-"""The three benchmark operations and the checks of their outputs.
+"""The two benchmark operations and the checks of their outputs.
 
 Each workload has ``op(spark, lake_dir)``, the timed operation, and
 ``check(spark, lake_dir, result)``, run outside the timing, which returns the
@@ -9,43 +9,17 @@ number of wrong outputs (0 when everything matches its oracle).
 - ``Stream``: ``streaming_raw_to_lake`` (availableNow) then
   ``compact_stream_to_routed``; per-route counts of ``routed_compacted``
   must equal the oracle's sink counts.
-- ``Queries``: the headline registry queries, each written to a ``noop``
-  sink in a seed-shuffled order; each query's result is compared once
-  per run with its DuckDB ``oracle_sql``, canonicalized the way
-  ``tools/check_oracle.py`` does.
 """
 
 from __future__ import annotations
 
 import glob
 import os
-import random
 
 import pandas as pd
 import pyarrow.parquet as pq
 
 from racing_telemetry_pipeline_spark.oracle import run_oracle
-
-# the 12 queries bench.py's phase A times (bench.HEADLINE)
-HEADLINE = [
-    "q1_pricing_summary",
-    "q3_top_orders",
-    "q5_region_revenue",
-    "v4_route_fanout",
-    "w2_gaps_segments",
-    "a1_hourly_stats",
-    "w9_interpolate",
-    "d1_dedup_keep_last",
-    "dd2_ngram_jaccard_pairs",
-    "dd3_minhash_signatures",
-    "sim1_cosine_topk",
-    "tx2_quality_score",
-]
-
-STAR_TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
 
 # lake table -> (oracle key, sort columns)
 BATCH_CHECKS = {
@@ -54,10 +28,6 @@ BATCH_CHECKS = {
     "agg_tool_frequency": ("tool_frequency", ["tool_name"]),
     "agg_role_latency": ("role_latency", ["role"]),
 }
-
-
-def noop_write(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
 
 
 def frame_diff(got: pd.DataFrame, want: pd.DataFrame, sort_cols: list[str]) -> str | None:
@@ -173,71 +143,3 @@ class Stream:
             print(f"[perfbench] routed_compacted counts {got} != oracle {self.want}", flush=True)
             return 1
         return 0
-
-
-def canon(df: pd.DataFrame) -> pd.DataFrame:
-    """tools/check_oracle.py's canonical form: sorted columns, values as
-    strings (floats to 10 significant digits), rows sorted."""
-    df = df[sorted(df.columns)].copy()
-    for c in df.columns:
-        s = df[c]
-        if str(s.dtype).startswith("datetime"):
-            try:
-                s = s.dt.tz_localize(None)
-            except TypeError:
-                pass
-            df[c] = s.astype("datetime64[us]").astype(str)
-        elif s.dtype == object or str(s.dtype).startswith(("float", "Float")):
-            df[c] = s.map(lambda v: "NULL" if pd.isna(v) else (f"{v:.10g}" if isinstance(v, float) else str(v)))
-        else:
-            df[c] = s.map(lambda v: "NULL" if pd.isna(v) else str(v))
-    return df.sort_values(list(df.columns), kind="stable").reset_index(drop=True)
-
-
-class Queries:
-    name = "queries"
-
-    def __init__(self, star_dir: str, seed: int):
-        from racing_telemetry_pipeline_spark.queries import all_queries_full
-
-        full = all_queries_full()
-        self.star = star_dir
-        self.order = list(HEADLINE)
-        random.Random(seed).shuffle(self.order)
-        self.fns = {n: full[n][0] for n in self.order}
-        self.sql = {n: full[n][1] for n in self.order}
-        self.wrong: set[str] | None = None  # filled by the first check
-
-    def run_query(self, spark, name: str) -> None:
-        noop_write(self.fns[name](spark, self.star))
-
-    def op(self, spark, lake_dir: str) -> None:
-        """One pass; the lake is unused (the queries write nothing)."""
-        for name in self.order:
-            self.run_query(spark, name)
-
-    def check_results(self, spark) -> None:
-        """Compare each query's collected result with DuckDB once per run."""
-        import duckdb
-
-        con = duckdb.connect()
-        for t in STAR_TABLES:
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM parquet_scan('{self.star}/{t}.parquet')")
-        self.wrong = set()
-        for name in self.order:
-            try:
-                got = canon(self.fns[name](spark, self.star).toPandas())
-                want = canon(con.execute(self.sql[name]).df())
-                ok = list(got.columns) == list(want.columns) and got.equals(want)
-            except Exception as e:  # a failing query is a wrong result
-                print(f"[perfbench] {name}: {type(e).__name__}: {e}", flush=True)
-                ok = False
-            if not ok:
-                print(f"[perfbench] {name}: result differs from its DuckDB oracle", flush=True)
-                self.wrong.add(name)
-        con.close()
-
-    def check(self, spark, lake_dir: str, result) -> int:
-        if self.wrong is None:
-            self.check_results(spark)
-        return len(self.wrong)
