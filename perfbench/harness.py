@@ -15,7 +15,7 @@ PACKAGE = "racing_telemetry_pipeline_spark"
 
 # (transcript scale, batch rows/file, stream rows/file)
 SIZES = {
-    "bench": ("bench-batch", 12_000, 4_700),
+    "bench": ("bench-batch", 6_000, 2_350),
     "smoke": ("sf-unit", 1_500, 400),
 }
 

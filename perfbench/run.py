@@ -2,27 +2,28 @@
 
 Run from the repository root:
 
-    python3 perfbench/run.py --workload batch_bulk --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload batch_bulk --seed 1 --seconds 20 --trace 0
     python3 perfbench/run.py --smoke     # every workload + a traced run, tiny inputs
 
 Workloads (BENCHMARK.json records why each was chosen):
 
 - ``batch_bulk``: ``plans.pipeline.run_pipeline(resume=False)`` on seeded
-  transcripts written as ~10 files;
+  transcripts written as ~9 files;
 - ``stream_compact``: ``streaming_raw_to_lake`` (availableNow, ~6
   micro-batches) then ``compact_stream_to_routed``, on the same rows
-  written as ~24 files.
+  written as ~23 files.
 
 Method. One process, one Spark session at ``local[nproc]`` from the
 package's ``get_spark``, with ``spark.local.dir`` moved from its tmpfs
 default into the checkout (harness.Env), and the pipeline's defaults
 (``pandas_udf`` grok, exact percentiles); the driver heap is a quarter of
 host memory. ``setup_s`` is the session start plus the first (cold)
-operation. Then warm operations run while the next is expected to end
-within ``--seconds`` (at least one), each on a fresh lake that is deleted
-afterwards, with a JVM GC in between; ``wall_s`` is their median wall
-time and ``cpu_s`` their median CPU time (the Python driver, the driver
-JVM and its Python workers; host CPU steal does not inflate it). Every
+operation. Then warm operations run back to back until ``--seconds``
+have passed, and at least ``MIN_WARM`` of them. Each operation runs on a
+fresh lake that is deleted afterwards, with a JVM GC in between;
+``wall_s`` is the median wall time of the warm operations; their CPU
+times (the Python driver, the driver JVM and its Python workers) go to
+the details line. Every
 operation's output is checked outside its timing; a wrong output or an
 exception counts as failed.
 
@@ -54,6 +55,14 @@ import procs
 from harness import PACKAGE, WORKLOADS, Counts, Env, make_workload, run_op, start_session
 
 
+# Warm operations still JIT-compile the code Spark generates for them
+# (10-20 CPU seconds of an operation's 15-30), so an operation's time
+# wanders by 10-30% from one to the next and keeps falling slowly over the
+# first few; the median of at least three keeps one slow or fast
+# operation from setting wall_s.
+MIN_WARM = 3
+
+
 def measure(args, env: Env, wl, n_rows: int, counts: Counts, info: dict) -> dict:
     """Untraced run: set-up, then warm operations for --seconds."""
     steal = procs.Steal()
@@ -62,11 +71,9 @@ def measure(args, env: Env, wl, n_rows: int, counts: Counts, info: dict) -> dict
     session_s = time.perf_counter() - t0
     try:
         cold = run_op(spark, wl, env, counts)[0]
-        # warm operations while the next is expected to end within
-        # --seconds (at least one)
         walls, cpus = [], []
         loop_t0 = time.perf_counter()
-        while not walls or time.perf_counter() - loop_t0 + walls[-1] <= args.seconds:
+        while len(walls) < MIN_WARM or time.perf_counter() - loop_t0 < args.seconds:
             wall, cpu, _ = run_op(spark, wl, env, counts)
             walls.append(wall)
             cpus.append(cpu)
@@ -74,12 +81,12 @@ def measure(args, env: Env, wl, n_rows: int, counts: Counts, info: dict) -> dict
     finally:
         procs.shutdown(spark)
     wall = statistics.median(walls)
-    info.update(session_s=session_s, cold_s=cold, walls_s=walls, cpu_steal=steal.share())
+    info.update(session_s=session_s, cold_s=cold, walls_s=walls, cpus_s=cpus,
+                cpu_steal=steal.share())
     return {
         "setup_s": (session_s + cold, "s"),
         "wall_s": (wall, "s"),
-        "rows_per_s": (n_rows / wall, "1/s"),
-        "cpu_s": (statistics.median(cpus), "s"),
+        "turns_per_s": (n_rows / wall, "1/s"),
     }
 
 
@@ -118,6 +125,9 @@ def main(argv=None) -> int:
     finally:
         shutil.rmtree(env.work, ignore_errors=True)
     info["fail_ratio"] = counts.failed / max(counts.attempted, 1)
+    import workloads  # imported by make_workload already, once the package is on the path
+
+    info["rounding_ties"] = workloads.Batch.ties
     print(json.dumps(info, default=str), flush=True)
     print(json.dumps({
         "correct": counts.failed == 0,

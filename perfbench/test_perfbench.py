@@ -21,6 +21,7 @@ sys.path[:0] = [HERE, ROOT]
 
 from layers import LADDER, LADDER_PASSES, _ladder  # noqa: E402
 from tracing import Span, _union_ms, span_stats  # noqa: E402
+from workloads import exact_percentile, frame_diff, settle_ties  # noqa: E402
 
 
 def test_union_of_job_intervals():
@@ -96,6 +97,37 @@ def test_ladder_self_time_is_a_within_pass_difference():
     assert out["lake.write_routed"]["self_s"] == pytest.approx(2.0)
     assert out["lake.scan"]["mb"] == pytest.approx(2.0)
     assert info["ladder_self_s_by_pass"]["skew.salted_parse_sync"] == [1.5, 2.5, 1.4]
+
+
+def test_exact_percentile_interpolates_like_numpy():
+    import numpy as np
+    from fractions import Fraction
+
+    xs = [7, 1, 4, 10, 3, 8]
+    for q in (50, 95, 99):
+        assert float(exact_percentile(xs, Fraction(q, 100))) == pytest.approx(np.percentile(xs, q))
+    assert exact_percentile([1, 2], Fraction(1, 2)) == Fraction(3, 2)
+
+
+def test_rounding_tie_accepts_either_rounding_and_nothing_else():
+    import pandas as pd
+
+    cols = ["role", "p50_latency_sec", "p95_latency_sec", "p99_latency_sec"]
+    got = pd.DataFrame([["a", 0.98805, 1.0, 2.0], ["b", 1.030231, 1.0, 2.0],
+                        ["c", 0.500003, 1.0, 2.0]], columns=cols)
+    want = pd.DataFrame([["a", 0.988051, 1.0, 2.0], ["b", 1.030232, 1.0, 2.0],
+                         ["c", 0.500001, 1.0, 2.0]], columns=cols)
+    exact = pd.DataFrame([
+        ["agg_role_latency", "a", "p50_latency_sec", "1976101/2000000"],  # 0.9880505: a tie
+        ["agg_role_latency", "b", "p50_latency_sec", "128779/125000"],    # 1.030232: no tie
+        ["agg_role_latency", "c", "p50_latency_sec", "1000001/2000000"],  # 0.5000005: a tie
+    ], columns=["table", "key", "column", "exact"])
+    notes = settle_ties("agg_role_latency", got, want, exact)
+    assert len(notes) == 1 and notes[0].startswith("agg_role_latency.p50_latency_sec[a]")
+    assert want.loc[0, "p50_latency_sec"] == 0.98805
+    # b is no tie and c's value is neither rounding of its tie: both still differ
+    assert frame_diff(got.iloc[1:], want.iloc[1:], ["role"]) is not None
+    assert frame_diff(got.iloc[2:], want.iloc[2:], ["role"]) is not None
 
 
 def test_smoke():
